@@ -8,13 +8,10 @@ code table (operators/pq.build_pq_index / refresh_pq_index). ANN
 queries against the table are correct after every batch, equal to a
 full re-encode over everything that has streamed (tested).
 
-Replay safety: the micro-batch id IS the partition key, so a
-crashed-and-retried batch overwrites its own partitions with identical
-rows — codes are never duplicated (same contract as
-postings_index_stream). At 100 TB the per-batch cost is the
-increment's encode (one broadcast-codebook join + min-struct
-aggregation, linear in the increment) — historical vectors are never
-re-read.
+Replay safety: the twin contract in streaming/util.py — codes are
+never duplicated. At 100 TB the per-batch cost is the increment's
+encode (one broadcast-codebook join + min-struct aggregation, linear
+in the increment) — historical vectors are never re-read.
 """
 
 from __future__ import annotations
@@ -23,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from degdb_spark.persistence import pin
+from degdb_spark.streaming.util import prior_batches, run_batches, write_batch
 
 
 def ann_index_stream(
@@ -54,20 +52,15 @@ def ann_index_stream(
         ):
             refresh_pq_index(
                 batch, table, centroids, codebook, id_col, vec_col,
-                batch_id=int(batch_id),
+                batch_id=batch_id,
             )
         else:
             build_pq_index(
                 batch, table, centroids, codebook, id_col, vec_col,
-                batch_id=int(batch_id),
+                batch_id=batch_id,
             )
 
-    return (
-        vecs.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_batches(vecs, checkpoint_dir, step)
 
 
 def semantic_index_stream(
@@ -90,22 +83,11 @@ def semantic_index_stream(
     assignment rows and raw vectors to ``{index_path,corpus_path}/
     batch=N`` — the corpus write IS the ingest; the step just keys it
     by batch so replays converge. The union of all batches' emissions
-    equals the full-corpus semantic_drop_pairs set (tested). Same
-    replay contract as the band/postings/span/ANN streams: every
-    output partition is keyed by micro-batch id and written with
-    overwrite, probes read only ``batch < batch_id``."""
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        _semantic_index_step(
-            batch, int(batch_id), index_path, pairs_path, corpus_path,
-            centroids, threshold, id_col, vec_col,
-        )
-
-    return (
-        vecs.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    equals the full-corpus semantic_drop_pairs set (tested). Replay
+    safety: streaming/util.py."""
+    return run_batches(
+        vecs, checkpoint_dir, _semantic_index_step, index_path, pairs_path,
+        corpus_path, centroids, threshold, id_col, vec_col,
     )
 
 
@@ -122,8 +104,6 @@ def _semantic_index_step(
 ) -> None:
     """One micro-batch of semantic_index_stream, module-level so the
     replay contract is directly testable."""
-    from pyspark.sql import functions as F
-
     from degdb_spark.operators.ml_lsh import (
         incremental_semantic_dedup,
         semantic_cell_table,
@@ -131,35 +111,23 @@ def _semantic_index_step(
 
     spark = batch.sparkSession
     batch = batch.transform(pin, eager=True)
-    from degdb_spark.streaming.util import has_committed_parquet
-
-    if has_committed_parquet(spark, index_path):
-        existing = (
-            spark.read.option("basePath", index_path)
-            .parquet(index_path)
-            .filter(F.col("batch") < F.lit(batch_id))
-            .select(id_col, "cell", "csim")
-        )
-        old_vecs = (
-            spark.read.option("basePath", corpus_path)
-            .parquet(corpus_path)
-            .filter(F.col("batch") < F.lit(batch_id))
-            .select(id_col, vec_col)
-        )
-    else:  # genuinely the first batch: empty index, right schema
-        existing = semantic_cell_table(batch, centroids, id_col, vec_col).limit(0)
-        old_vecs = batch.select(id_col, vec_col).limit(0)
+    existing = prior_batches(
+        spark, index_path, batch_id, [id_col, "cell", "csim"],
+        lambda: semantic_cell_table(batch, centroids, id_col, vec_col).limit(0),
+    )
+    old_vecs = prior_batches(
+        spark, corpus_path, batch_id, [id_col, vec_col],
+        lambda: batch.select(id_col, vec_col).limit(0),
+    )
     all_vectors = old_vecs.unionByName(batch.select(id_col, vec_col))
     pairs = incremental_semantic_dedup(
         batch, existing, all_vectors, centroids, threshold, id_col, vec_col
     )
-    pairs.write.mode("overwrite").parquet(f"{pairs_path}/batch={batch_id}")
-    batch.select(id_col, vec_col).write.mode("overwrite").parquet(
-        f"{corpus_path}/batch={batch_id}"
+    write_batch(pairs, pairs_path, batch_id)
+    write_batch(batch.select(id_col, vec_col), corpus_path, batch_id)
+    write_batch(
+        semantic_cell_table(batch, centroids, id_col, vec_col), index_path, batch_id
     )
-    semantic_cell_table(batch, centroids, id_col, vec_col).write.mode(
-        "overwrite"
-    ).parquet(f"{index_path}/batch={batch_id}")
 
 
 def knn_graph_index_stream(
@@ -179,25 +147,14 @@ def knn_graph_index_stream(
     every later batch inserts its vectors by search-then-link over
     the artifact so far (operators/knngraph.refresh_knn_graph_index)
     — historical vectors are read only from the index's own vector
-    table, never from upstream storage. Same replay contract as
-    ann_index_stream: the micro-batch id is the partition key, so a
-    crashed-and-retried batch overwrites its own partitions. At
-    100 TB the per-batch cost is the increment's beam walks
+    table, never from upstream storage. Replay safety:
+    streaming/util.py. At 100 TB the per-batch cost is the increment's beam walks
     (|inc|·beam·k·hops scored candidates) + the bounded
     within-increment brute force — corpus-size-independent."""
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        _knn_graph_index_step(
-            batch, int(batch_id), table,
-            k=k, rounds=rounds, rho=rho, beam=beam, hops=hops,
-            id_col=id_col, vec_col=vec_col,
-        )
-
-    return (
-        vecs.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_batches(
+        vecs, checkpoint_dir, _knn_graph_index_step, table,
+        k=k, rounds=rounds, rho=rho, beam=beam, hops=hops,
+        id_col=id_col, vec_col=vec_col,
     )
 
 

@@ -11,9 +11,9 @@ correct after every batch — equal to the inline wedge build over
 everything that has streamed (tested). Historical lineitem is never
 re-read; an order contributes ~12 bytes per co-purchase pair forever.
 
-Replay safety: the micro-batch id IS the partition key (static INSERT
-OVERWRITE), so a crashed-and-retried batch overwrites its own
-partition with identical rows — counts never double. Deletion flows
+Replay safety: the twin contract in streaming/util.py (the batch
+partition is written by static INSERT OVERWRITE) — counts never
+double. Deletion flows
 through the SAME table as negative-count batches
 (operators/basket.retract_basket_edges_index), so the streamed and
 batch maintenance paths share one artifact.
@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from degdb_spark.persistence import pin
+from degdb_spark.streaming.util import run_batches
 
 
 def basket_edges_stream(
@@ -33,17 +34,7 @@ def basket_edges_stream(
     buckets: int = 16,
 ):
     """Start the availableNow stream; see the module docstring."""
-    spark = lineitem.sparkSession
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        _basket_edges_step(batch, int(batch_id), table, buckets)
-
-    return (
-        lineitem.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_batches(lineitem, checkpoint_dir, _basket_edges_step, table, buckets)
 
 
 def _basket_edges_step(

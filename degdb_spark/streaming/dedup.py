@@ -32,6 +32,12 @@ from pyspark.sql import functions as F
 from degdb_spark.operators.dedup import minhash_band_hashes
 from degdb_spark.operators.text import fingerprint
 from degdb_spark.persistence import pin
+from degdb_spark.streaming.util import (
+    merged_additive,
+    prior_batches,
+    run_batches,
+    write_batch,
+)
 
 
 def exact_dedup_stream(
@@ -80,8 +86,8 @@ def neardup_index_stream(
     bands: int = 8,
 ):
     """The third dedup tier: banded-LSH candidate generation as a
-    STREAM, via foreachBatch against a persisted band index — the
-    streaming twin of operators/dedup.incremental_lsh_candidates.
+    STREAM against a persisted band index — the streaming twin of
+    operators/dedup.incremental_lsh_candidates.
 
     Each micro-batch (1) probes the index for new-vs-corpus candidate
     pairs plus new-vs-new within the batch, (2) appends the pairs to
@@ -94,31 +100,12 @@ def neardup_index_stream(
 
     State lives in the PERSISTED index, not stream state: per-batch
     cost is the increment's sketch build + one band_hash-keyed probe
-    join (bucket the index by band_hash at scale).
-
-    Replay safety: every output is keyed by micro-batch id — pairs land
-    in ``{pairs_path}/batch=N``, band rows in ``{index_path}/batch=N``,
-    both written with overwrite — so a crashed-and-retried batch
-    rewrites its own partition with identical rows instead of
-    double-appending. The probe reads only partitions ``batch <
-    batch_id``, which makes the candidate set deterministic even when a
-    retry finds its own half-written band partition already present.
-    Index existence is checked explicitly (Hadoop FS); a transient read
-    failure on a later batch FAILS the batch so the checkpoint retries
-    it, rather than being silently treated as an empty index (which
-    would permanently lose that batch's new-vs-corpus pairs). Returns
-    the started StreamingQuery (availableNow-triggered)."""
-    def step(batch: DataFrame, batch_id: int) -> None:
-        _neardup_index_step(
-            batch, int(batch_id), index_path, pairs_path,
-            id_col, text_col, shingle_k, num_hashes, bands,
-        )
-
-    return (
-        docs.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    join (bucket the index by band_hash at scale). Replay safety: the
+    twin contract in streaming/util.py. Returns the started
+    StreamingQuery (availableNow-triggered)."""
+    return run_batches(
+        docs, checkpoint_dir, _neardup_index_step, index_path, pairs_path,
+        id_col, text_col, shingle_k, num_hashes, bands,
     )
 
 
@@ -140,26 +127,20 @@ def _neardup_index_step(
 
     spark = batch.sparkSession
     batch = batch.transform(pin, eager=True)  # feeds probe + index write
-    from degdb_spark.streaming.util import has_committed_parquet
-
-    if has_committed_parquet(spark, index_path):
-        existing = (
-            spark.read.option("basePath", index_path)
-            .parquet(index_path)
-            .filter(F.col("batch") < F.lit(batch_id))
-            .select(id_col, "band", "band_hash")
-        )
-    else:  # genuinely the first batch: empty index, right schema
-        existing = band_table(
+    existing = prior_batches(
+        spark, index_path, batch_id, [id_col, "band", "band_hash"],
+        lambda: band_table(
             batch, text_col, id_col, shingle_k, num_hashes, bands
-        ).limit(0)
+        ).limit(0),
+    )
     cands = incremental_lsh_candidates(
         batch, existing, text_col, id_col, shingle_k, num_hashes, bands
     )
-    cands.write.mode("overwrite").parquet(f"{pairs_path}/batch={batch_id}")
-    band_table(batch, text_col, id_col, shingle_k, num_hashes, bands).write.mode(
-        "overwrite"
-    ).parquet(f"{index_path}/batch={batch_id}")
+    write_batch(cands, pairs_path, batch_id)
+    write_batch(
+        band_table(batch, text_col, id_col, shingle_k, num_hashes, bands),
+        index_path, batch_id,
+    )
 
 
 def postings_index_stream(
@@ -178,12 +159,10 @@ def postings_index_stream(
     correct after every batch, equal to a full rebuild over everything
     that has streamed (tested).
 
-    Replay safety: the micro-batch id IS the partition key, so a
-    crashed-and-retried batch overwrites its own partition with
-    identical rows — postings are never double-appended and
-    _n_docs/_total_dl never double-counted (the stats are per-batch
-    rows summed at read time; there is no swap step to crash between).
-    Returns the started availableNow StreamingQuery."""
+    Replay safety: the twin contract in streaming/util.py. The stats
+    are per-batch rows summed at read time, so a retry never
+    double-counts _n_docs/_total_dl and there is no swap step to crash
+    between. Returns the started availableNow StreamingQuery."""
     from degdb_spark.operators.search import (
         build_postings_index,
         refresh_postings_index,
@@ -194,16 +173,11 @@ def postings_index_stream(
     def step(batch: DataFrame, batch_id: int) -> None:
         batch = batch.transform(pin, eager=True)
         if spark.catalog.tableExists(table):
-            refresh_postings_index(batch, table, text_col, batch_id=int(batch_id))
+            refresh_postings_index(batch, table, text_col, batch_id=batch_id)
         else:
-            build_postings_index(batch, table, text_col, buckets, batch_id=int(batch_id))
+            build_postings_index(batch, table, text_col, buckets, batch_id=batch_id)
 
-    return (
-        docs.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_batches(docs, checkpoint_dir, step)
 
 
 def positional_index_stream(
@@ -232,18 +206,11 @@ def positional_index_stream(
     def step(batch: DataFrame, batch_id: int) -> None:
         batch = batch.transform(pin, eager=True)
         if spark.catalog.tableExists(table):
-            refresh_positional_index(batch, table, text_col, batch_id=int(batch_id))
+            refresh_positional_index(batch, table, text_col, batch_id=batch_id)
         else:
-            build_positional_index(
-                batch, table, text_col, buckets, batch_id=int(batch_id)
-            )
+            build_positional_index(batch, table, text_col, buckets, batch_id=batch_id)
 
-    return (
-        docs.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_batches(docs, checkpoint_dir, step)
 
 
 def span_index_stream(
@@ -258,23 +225,13 @@ def span_index_stream(
     """Streamed C4-style span dedup: each micro-batch probes the
     persisted span index (distinct 128-bit span hashes of all earlier
     batches — 16 bytes per span, never corpus text), drops
-    already-seen spans from its documents, writes the cleaned docs and
-    its genuinely-new spans — both to ``batch=N`` partitions with
-    overwrite, so a crashed-and-retried batch converges (the probe
-    reads only ``batch < batch_id``, same replay discipline as
-    neardup_index_stream). Doc-ordered batches reproduce the batch
-    operator bit-for-bit (pytest-pinned)."""
-    def step(batch: DataFrame, batch_id: int) -> None:
-        _span_index_step(
-            batch, int(batch_id), index_path, clean_path,
-            id_col, text_col, span_tokens,
-        )
-
-    return (
-        docs.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    already-seen spans from its documents, and writes the cleaned docs
+    and its genuinely-new spans, each to its own ``batch=N``
+    partition (replay safety: streaming/util.py). Doc-ordered batches
+    reproduce the batch operator bit-for-bit (pytest-pinned)."""
+    return run_batches(
+        docs, checkpoint_dir, _span_index_step, index_path, clean_path,
+        id_col, text_col, span_tokens,
     )
 
 
@@ -293,30 +250,18 @@ def _span_index_step(
 
     spark = batch.sparkSession
     batch = batch.transform(pin, eager=True)  # feeds probe + both writes
-    from degdb_spark.streaming.util import has_committed_parquet
-
-    if has_committed_parquet(spark, index_path):
-        idx = spark.read.option("basePath", index_path).parquet(index_path)
-        if not {"span_h1", "span_h2"} <= set(idx.columns):
-            # a pre-128-bit index (single span/span_hash column) must
-            # FAIL the stream loudly: silently treating its batches as
-            # unreadable would re-admit every historical span as fresh
-            raise RuntimeError(
-                f"span index at {index_path} has columns {idx.columns}; "
-                "this code writes (span_h1, span_h2). Rebuild the index "
-                "(fresh index_path + checkpoint) — hash-key formats are "
-                "not migratable in place."
-            )
-        existing = idx.filter(F.col("batch") < F.lit(batch_id)).select(
-            "span_h1", "span_h2"
-        )
-    else:  # genuinely the first batch: empty index, right schema
-        existing = spark.createDataFrame([], "span_h1 long, span_h2 long")
+    existing = prior_batches(
+        spark, index_path, batch_id, ["span_h1", "span_h2"],
+        "span_h1 long, span_h2 long",
+    )
     report, fresh = incremental_span_dedup(
         batch, existing, text_col, id_col, span_tokens
     )
-    report.write.mode("overwrite").parquet(f"{clean_path}/batch={batch_id}")
-    fresh.write.mode("overwrite").parquet(f"{index_path}/batch={batch_id}")
+    write_batch(report, clean_path, batch_id)
+    write_batch(fresh, index_path, batch_id)
+
+
+_DSIR_SCHEMA = "b int, cb long, ct long"
 
 
 def dsir_counts_stream(
@@ -331,34 +276,25 @@ def dsir_counts_stream(
     ``{counts_path}/batch=N`` — counts are ADDITIVE, so the live state
     is a bounded (≤DSIR_BUCKETS-row) sum over batch partitions
     (dsir_counts_load) and scoring from it equals scoring from a full
-    recompute (parity-tested). Same replay contract as the other index
-    streams: the batch id keys an overwrite-mode partition, so a
-    crashed-and-retried batch converges instead of double-counting."""
+    recompute (parity-tested). Replay safety: streaming/util.py."""
+    return run_batches(docs, checkpoint_dir, _dsir_counts_step, counts_path, target)
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        from degdb_spark.operators.text import dsir_occurrences, dsir_word_counts
 
-        dsir_word_counts(
-            dsir_occurrences(batch.transform(pin, eager=True)), target
-        ).write.mode("overwrite").parquet(f"{counts_path}/batch={batch_id}")
+def _dsir_counts_step(
+    batch: DataFrame, batch_id: int, counts_path: str, target: str
+) -> None:
+    """One micro-batch, module-level so the replay contract is
+    directly testable (the family convention)."""
+    from degdb_spark.operators.text import dsir_occurrences, dsir_word_counts
 
-    return (
-        docs.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    occ = dsir_occurrences(batch.transform(pin, eager=True))
+    write_batch(dsir_word_counts(occ, target), counts_path, batch_id)
 
 
 def dsir_counts_load(spark, counts_path: str) -> DataFrame:
     """The live DSIR state from the batch-keyed table: per-bucket sums
     across batch partitions (bounded at DSIR_BUCKETS rows)."""
-    return (
-        spark.read.option("basePath", counts_path)
-        .parquet(counts_path)
-        .groupBy("b")
-        .agg(F.sum("cb").alias("cb"), F.sum("ct").alias("ct"))
-    )
+    return merged_additive(spark, counts_path, _DSIR_SCHEMA, ["b"], "cb", "ct")
 
 
 def substring_index_stream(
@@ -376,23 +312,12 @@ def substring_index_stream(
     per distinct window, never corpus text), removes already-seen
     >= min_tokens substrings from its documents, applies
     first-occurrence within the batch, and writes cleaned docs + its
-    genuinely-new window hashes, both to ``batch=N`` partitions with
-    overwrite (crashed-and-retried batches converge; the probe reads
-    only ``batch < batch_id`` — the span_index_stream discipline).
-    Doc-ordered batches reproduce the batch operator bit-for-bit
-    (pytest-pinned)."""
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        _substring_index_step(
-            batch, int(batch_id), index_path, clean_path,
-            id_col, text_col, min_tokens,
-        )
-
-    return (
-        docs.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    genuinely-new window hashes, each to its own ``batch=N`` partition
+    (replay safety: streaming/util.py). Doc-ordered batches reproduce
+    the batch operator bit-for-bit (pytest-pinned)."""
+    return run_batches(
+        docs, checkpoint_dir, _substring_index_step, index_path, clean_path,
+        id_col, text_col, min_tokens,
     )
 
 
@@ -411,20 +336,15 @@ def _substring_index_step(
 
     spark = batch.sparkSession
     batch = batch.transform(pin, eager=True)  # feeds probe + both writes
-    from degdb_spark.streaming.util import has_committed_parquet
-
-    if has_committed_parquet(spark, index_path):
-        idx = spark.read.option("basePath", index_path).parquet(index_path)
-        existing = idx.filter(F.col("batch") < F.lit(batch_id)).select(
-            "win_h1", "win_h2"
-        )
-    else:  # genuinely the first batch: empty index, right schema
-        existing = spark.createDataFrame([], "win_h1 long, win_h2 long")
+    existing = prior_batches(
+        spark, index_path, batch_id, ["win_h1", "win_h2"],
+        "win_h1 long, win_h2 long",
+    )
     report, fresh = incremental_substring_dedup(
         batch, existing, text_col, id_col, min_tokens
     )
-    report.write.mode("overwrite").parquet(f"{clean_path}/batch={batch_id}")
-    fresh.write.mode("overwrite").parquet(f"{index_path}/batch={batch_id}")
+    write_batch(report, clean_path, batch_id)
+    write_batch(fresh, index_path, batch_id)
 
 
 def paragraph_index_stream(
@@ -437,24 +357,15 @@ def paragraph_index_stream(
 ):
     """Streamed CCNet paragraph dedup — lifecycle #17, the paragraph-
     granularity twin of span_index_stream with the identical index
-    layout and replay discipline: each micro-batch probes the
-    persisted (span_h1, span_h2) normalized-paragraph fingerprints of
-    all earlier batches, drops already-seen paragraphs from its
-    documents, and writes cleaned docs + its genuinely-new
-    fingerprints to ``batch=N`` overwrite partitions (probe reads only
-    ``batch < batch_id``; crashed-and-retried batches converge).
-    Doc-ordered batches reproduce the batch operator bit-for-bit."""
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        _paragraph_index_step(
-            batch, int(batch_id), index_path, clean_path, id_col, text_col
-        )
-
-    return (
-        docs.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    layout: each micro-batch probes the persisted (span_h1, span_h2)
+    normalized-paragraph fingerprints of all earlier batches, drops
+    already-seen paragraphs from its documents, and writes cleaned
+    docs + its genuinely-new fingerprints to its own ``batch=N``
+    partitions (replay safety: streaming/util.py). Doc-ordered batches
+    reproduce the batch operator bit-for-bit."""
+    return run_batches(
+        docs, checkpoint_dir, _paragraph_index_step, index_path, clean_path,
+        id_col, text_col,
     )
 
 
@@ -469,17 +380,13 @@ def _paragraph_index_step(
     """One micro-batch of paragraph_index_stream, module-level so the
     replay contract is directly testable."""
     from degdb_spark.operators.dedup import incremental_paragraph_dedup
-    from degdb_spark.streaming.util import has_committed_parquet
 
     spark = batch.sparkSession
     batch = batch.transform(pin, eager=True)  # feeds probe + both writes
-    if has_committed_parquet(spark, index_path):
-        idx = spark.read.option("basePath", index_path).parquet(index_path)
-        existing = idx.filter(F.col("batch") < F.lit(batch_id)).select(
-            "span_h1", "span_h2"
-        )
-    else:  # genuinely the first batch: empty index, right schema
-        existing = spark.createDataFrame([], "span_h1 long, span_h2 long")
+    existing = prior_batches(
+        spark, index_path, batch_id, ["span_h1", "span_h2"],
+        "span_h1 long, span_h2 long",
+    )
     report, fresh = incremental_paragraph_dedup(batch, existing, text_col, id_col)
-    report.write.mode("overwrite").parquet(f"{clean_path}/batch={batch_id}")
-    fresh.write.mode("overwrite").parquet(f"{index_path}/batch={batch_id}")
+    write_batch(report, clean_path, batch_id)
+    write_batch(fresh, index_path, batch_id)

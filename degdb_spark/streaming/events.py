@@ -106,16 +106,6 @@ def ohlc_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     )
 
 
-def sliding_rate_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Sliding windows (1 h window, 15 min slide) — rate monitoring."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("win"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("win.start").alias("win_start"), "n_events")
-    )
-
-
 def dedup_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Exactly-once semantics per event_id within the watermark horizon
     (streaming twin of the idempotent insert, triplestore.go:134-148)."""

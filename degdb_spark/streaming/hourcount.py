@@ -13,10 +13,7 @@ the corpus-deletion probe pins (tests/test_index_scale_probe.py):
 delete every source event file, recompute the ACF, and it still
 equals the full-corpus run.
 
-Replay safety: the micro-batch id IS the partition key, so a
-crashed-and-retried batch overwrites its own partition with identical
-rows (the family contract); the first-write crash case is covered by
-has_committed_parquet like the other twins.
+Replay safety: the twin contract in streaming/util.py.
 
 At 100 TB: per-batch state is the batch's own distinct hours (bounded
 by the batch's time span — a day-long batch is 24 rows per partition);
@@ -30,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from degdb_spark.streaming.util import merged_additive, run_batches, write_batch
+
 _INDEX_SCHEMA = "h timestamp, x long"
 
 
@@ -41,15 +40,8 @@ def hourly_count_index_stream(
 ):
     """Maintain the per-batch hourly-count index from an event stream.
     Returns the started availableNow StreamingQuery."""
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        _hourcount_index_step(batch, int(batch_id), index_path, ts_col)
-
-    return (
-        events.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_batches(
+        events, checkpoint_dir, _hourcount_index_step, index_path, ts_col
     )
 
 
@@ -61,13 +53,11 @@ def _hourcount_index_step(
     counts = batch.groupBy(
         F.date_trunc("hour", F.col(ts_col)).alias("h")
     ).agg(F.count(F.lit(1)).alias("x"))
-    counts.write.mode("overwrite").parquet(f"{index_path}/batch={batch_id}")
+    write_batch(counts, index_path, batch_id)
 
 
 def merged_hourly_counts(spark, index_path: str) -> DataFrame:
     """The additive merge of every committed batch partition — exactly
     the (h, x) frame hourly_acf consumes (shared read discipline:
     streaming/util.merged_additive)."""
-    from degdb_spark.streaming.util import merged_additive
-
     return merged_additive(spark, index_path, _INDEX_SCHEMA, ["h"], "x")

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from degdb_spark.schemas import TRIPLE_KEY, TRIPLE_SCHEMA
+from degdb_spark.streaming.util import run_batches
 
 #: File-stream schema for incoming triple batches (JSONL or parquet).
 TRIPLE_STREAM_SCHEMA = TRIPLE_SCHEMA
@@ -54,12 +55,7 @@ def ingest_stream(
             "append"
         ).parquet(store_path)
 
-    return (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_batches(stream, checkpoint_dir, upsert)
 
 
 def cdc_stream_to_versioned(
@@ -107,9 +103,4 @@ def cdc_stream_to_versioned(
         else:
             table.create(dedup)
 
-    return (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_batches(stream, checkpoint_dir, upsert)

@@ -28,11 +28,10 @@ doc_id decides train/test membership, re-derived per batch (pure
 codegen), so a document's feature rows land with exactly the split
 batch training would assign.
 
-Replay safety: the micro-batch id IS the partition key, so a
-crashed-and-retried batch overwrites its own partition with identical
-rows (the family contract); merges are a plain union because feature
-rows are per-doc and doc ids are unique across the stream (the same
-uniqueness contract every index twin has).
+Replay safety: the twin contract in streaming/util.py. Merges are a
+plain union because feature rows are per-doc and doc ids are unique
+across the stream (the same uniqueness contract every index twin
+has).
 """
 
 from __future__ import annotations
@@ -40,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from degdb_spark.persistence import pin
+from degdb_spark.streaming.util import run_batches, write_batch
 
 _FEAT_SCHEMA = "doc_id long, actual string, split string, f int, x long"
 
@@ -63,18 +63,9 @@ def linfeat_index_stream(
     (doc_id, actual, split, f, x) schema, so ONE index layout and ONE
     training seam serve both model families — the wordhist/unigram
     "one index, two trainers" device applied to the perceptron."""
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        _linfeat_index_step(
-            batch, int(batch_id), index_path, label_col, test_pct,
-            n_features, featurizer,
-        )
-
-    return (
-        docs.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_batches(
+        docs, checkpoint_dir, _linfeat_index_step, index_path, label_col,
+        test_pct, n_features, featurizer,
     )
 
 
@@ -102,8 +93,7 @@ def _linfeat_index_step(
         raise ValueError(
             f"featurizer must be 'words' or 'char3', got {featurizer!r}"
         )
-    feat = feat.transform(pin, eager=True)
-    feat.write.mode("overwrite").parquet(f"{index_path}/batch={batch_id}")
+    write_batch(feat.transform(pin, eager=True), index_path, batch_id)
 
 
 def merged_features(spark, index_path: str) -> DataFrame:

@@ -14,10 +14,7 @@ the index alone equals the full-corpus run exactly, never re-reading
 a historical training document. That claim is pinned by the
 corpus-deletion probe (tests/test_index_scale_probe.py).
 
-Replay safety: the micro-batch id IS the partition key (overwrite),
-so a crashed-and-retried batch converges; crashed first writes are
-covered by has_committed_parquet via the shared merged_additive read
-discipline.
+Replay safety: the twin contract in streaming/util.py.
 
 At 100 TB: per-batch state is the batch's own observed bigrams
 (Heaps-bounded, like the word histogram); the live model is a
@@ -28,6 +25,8 @@ in one shuffle.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+from degdb_spark.streaming.util import merged_additive, run_batches, write_batch
 
 _INDEX_SCHEMA = "a string, b string, n long"
 
@@ -42,15 +41,8 @@ def lm_counts_stream(
 ):
     """Maintain the per-batch bigram-count index from a document
     stream. Returns the started availableNow StreamingQuery."""
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        _lm_counts_step(batch, int(batch_id), index_path, id_col, text_col, test_pct)
-
-    return (
-        docs.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_batches(
+        docs, checkpoint_dir, _lm_counts_step, index_path, id_col, text_col, test_pct
     )
 
 
@@ -66,14 +58,11 @@ def _lm_counts_step(
     directly testable (the family convention)."""
     from degdb_spark.operators.lm import bigram_counts
 
-    counts = bigram_counts(batch, id_col, text_col, test_pct)
-    counts.write.mode("overwrite").parquet(f"{index_path}/batch={batch_id}")
+    write_batch(bigram_counts(batch, id_col, text_col, test_pct), index_path, batch_id)
 
 
 def merged_counts(spark, index_path: str) -> DataFrame:
     """The additive merge of every committed batch partition —
     score_from_counts' input (shared read discipline:
     streaming/util.merged_additive)."""
-    from degdb_spark.streaming.util import merged_additive
-
     return merged_additive(spark, index_path, _INDEX_SCHEMA, ["a", "b"], "n")

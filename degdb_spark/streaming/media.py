@@ -10,13 +10,11 @@ are derived from the INDEX alone (new×new and new×old via the banded
 candidate join) — historical payloads are never re-decoded; old media
 participate through 32 bytes of fingerprint each.
 
-Replay safety: the micro-batch id IS the partition key and the probe
-reads only ``batch < batch_id``, so a crashed-and-retried batch
-overwrites its own partitions with identical rows (same contract as
-span_index_stream). Union of per-batch pair emissions == the
-full-corpus banded_neardup_pairs set, each pair emitted exactly once —
-in the batch that completes it (pytest-pinned parity + replay
-convergence in tests/test_streaming.py).
+Replay safety: the twin contract in streaming/util.py. Union of
+per-batch pair emissions == the full-corpus banded_neardup_pairs set,
+each pair emitted exactly once — in the batch that completes it
+(pytest-pinned parity + replay convergence in
+tests/test_streaming.py).
 
 At 100 TB: per-batch cost is the increment's decode + a banded
 equi-join against fingerprints (which are ~32 B × corpus — itself
@@ -33,7 +31,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
 from degdb_spark.persistence import pin
+from degdb_spark.streaming.util import prior_batches, run_batches, write_batch
 
 _INDEX_SCHEMA = "media_id long, b0 long, b1 long, b2 long, b3 long"
 
@@ -54,15 +54,8 @@ def ahash_index_stream(
     GIF/AVI/RAWV containers); all four band into the same (b0..b3)
     index schema, so one lifecycle serves every modality and both
     image hashes. Returns the started availableNow StreamingQuery."""
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        _ahash_index_step(batch, int(batch_id), index_path, pairs_path, kind)
-
-    return (
-        media.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_batches(
+        media, checkpoint_dir, _ahash_index_step, index_path, pairs_path, kind
     )
 
 
@@ -99,28 +92,13 @@ def _ahash_index_step(
     # pure memory pressure — the hashes below are what both writes and
     # the probe reuse
     new_hashes = hash_op(batch).transform(pin, eager=True)
-
-    from degdb_spark.streaming.util import has_committed_parquet
-
-    if has_committed_parquet(spark, index_path):
-        # EXPLICIT schema: if the first index write crashed mid-commit,
-        # the directory exists with only _temporary files — schema
-        # inference would throw on every replay and wedge the stream;
-        # with the schema supplied, zero committed files read as an
-        # empty frame and the retry converges
-        old_hashes = (
-            spark.read.schema(_INDEX_SCHEMA + ", batch int")
-            .option("basePath", index_path)
-            .parquet(index_path)
-            .filter(F.col("batch") < F.lit(batch_id))
-            .select("media_id", "b0", "b1", "b2", "b3")
-        )
-    else:  # genuinely the first batch
-        old_hashes = spark.createDataFrame([], _INDEX_SCHEMA)
-
+    old_hashes = prior_batches(
+        spark, index_path, batch_id, ["media_id", "b0", "b1", "b2", "b3"],
+        _INDEX_SCHEMA,
+    )
     pairs = incremental_banded_neardup_pairs(new_hashes, old_hashes)
-    pairs.write.mode("overwrite").parquet(f"{pairs_path}/batch={batch_id}")
-    new_hashes.write.mode("overwrite").parquet(f"{index_path}/batch={batch_id}")
+    write_batch(pairs, pairs_path, batch_id)
+    write_batch(new_hashes, index_path, batch_id)
 
 
 _SHOT_INDEX_SCHEMA = (
@@ -145,19 +123,9 @@ def shot_index_stream(
     later member is new has a new side — the per-batch emissions
     union to exactly the full-corpus shot_overlap_neardups set, each
     video pair once. Historical payloads are never re-decoded; old
-    videos participate through ~40 bytes per shot. Same replay
-    contract as every index twin (batch id = partition key, overwrite
-    on retry converges)."""
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        _shot_index_step(batch, int(batch_id), index_path, pairs_path)
-
-    return (
-        media.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    videos participate through ~40 bytes per shot. Replay safety:
+    streaming/util.py."""
+    return run_batches(media, checkpoint_dir, _shot_index_step, index_path, pairs_path)
 
 
 def _shot_index_step(
@@ -183,22 +151,11 @@ def _shot_index_step(
         .filter(F.col("shot_idx") >= 0)
         .transform(pin, eager=True)
     )
-
-    from degdb_spark.streaming.util import has_committed_parquet
-
-    if has_committed_parquet(spark, index_path):
-        # EXPLICIT schema for the same crashed-first-write reason as
-        # _ahash_index_step
-        old_shots = (
-            spark.read.schema(_SHOT_INDEX_SCHEMA + ", batch int")
-            .option("basePath", index_path)
-            .parquet(index_path)
-            .filter(F.col("batch") < F.lit(batch_id))
-            .select("media_id", "shot_idx", "n_frames", "b0", "b1", "b2", "b3")
-        )
-    else:  # genuinely the first batch
-        old_shots = spark.createDataFrame([], _SHOT_INDEX_SCHEMA)
-
+    old_shots = prior_batches(
+        spark, index_path, batch_id,
+        ["media_id", "shot_idx", "n_frames", "b0", "b1", "b2", "b3"],
+        _SHOT_INDEX_SCHEMA,
+    )
     pairs = incremental_shot_neardups(new_shots, old_shots)
-    pairs.write.mode("overwrite").parquet(f"{pairs_path}/batch={batch_id}")
-    new_shots.write.mode("overwrite").parquet(f"{index_path}/batch={batch_id}")
+    write_batch(pairs, pairs_path, batch_id)
+    write_batch(new_shots, index_path, batch_id)

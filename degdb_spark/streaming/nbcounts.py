@@ -27,10 +27,7 @@ bucket of doc_id decides train membership, re-derived per batch (pure
 codegen, no doc-level join), so a document lands in the training
 statistics exactly when batch training would have used it.
 
-Replay safety: the micro-batch id IS the partition key, so a
-crashed-and-retried batch overwrites its own partition with identical
-rows (the family contract); the first-write crash case is covered by
-has_committed_parquet like the other twins.
+Replay safety: the twin contract in streaming/util.py.
 
 At 100 TB: per-batch state is the batch's own (label, token) pairs —
 Heaps-bounded like the word histogram — and retraining cost is
@@ -41,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from degdb_spark.streaming.util import merged_additive, run_batches, write_batch
 
 #: one row per statistic: stat='tok' → (cand, token, cnt occurrences);
 #: stat='doc' → (cand, token='', cnt = doc count). The empty token is
@@ -58,15 +57,8 @@ def nb_stats_index_stream(
 ):
     """Maintain the per-batch NB statistics index from a document
     stream. Returns the started availableNow StreamingQuery."""
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        _nb_index_step(batch, int(batch_id), index_path, label_col, test_pct)
-
-    return (
-        docs.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_batches(
+        docs, checkpoint_dir, _nb_index_step, index_path, label_col, test_pct
     )
 
 
@@ -98,17 +90,13 @@ def _nb_index_step(
     doc_counts = train.groupBy(F.col(label_col).alias("cand")).agg(
         F.count(F.lit(1)).alias("cnt")
     ).select(F.lit("doc").alias("stat"), "cand", F.lit("").alias("token"), "cnt")
-    tok_counts.unionByName(doc_counts).write.mode("overwrite").parquet(
-        f"{index_path}/batch={batch_id}"
-    )
+    write_batch(tok_counts.unionByName(doc_counts), index_path, batch_id)
 
 
 def merged_nb_stats(spark, index_path: str) -> tuple[DataFrame, DataFrame]:
     """The additive merge of every committed batch partition —
     predict_from_stats' (counts, nd) inputs, split back out of the
     single-table index by the ``stat`` discriminator."""
-    from degdb_spark.streaming.util import merged_additive
-
     merged = merged_additive(
         spark, index_path, _STATS_SCHEMA, ["stat", "cand", "token"], "cnt"
     )

@@ -13,10 +13,7 @@ the corpus-deletion probe pins (tests/test_index_scale_probe.py):
 delete every source document, retrain, and the merges still equal the
 full-corpus training run.
 
-Replay safety: the micro-batch id IS the partition key, so a
-crashed-and-retried batch overwrites its own partition with identical
-rows (the span/ANN/media twins' contract); the first-write crash case
-is covered by has_committed_parquet like the other twins.
+Replay safety: the twin contract in streaming/util.py.
 
 At 100 TB: per-batch state is the batch's own distinct words; the
 index is Heaps-bounded (~10⁶-10⁷ rows per batch partition, summable
@@ -27,6 +24,8 @@ decoupled from corpus size.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+from degdb_spark.streaming.util import merged_additive, run_batches, write_batch
 
 _INDEX_SCHEMA = "w string, n long"
 
@@ -39,16 +38,7 @@ def word_histogram_index_stream(
 ):
     """Maintain the per-batch word-histogram index from a document
     stream. Returns the started availableNow StreamingQuery."""
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        _wordhist_index_step(batch, int(batch_id), index_path, text_col)
-
-    return (
-        docs.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_batches(docs, checkpoint_dir, _wordhist_index_step, index_path, text_col)
 
 
 def _wordhist_index_step(
@@ -58,14 +48,11 @@ def _wordhist_index_step(
     directly testable (the family convention)."""
     from degdb_spark.operators.text import word_histogram
 
-    counts = word_histogram(batch, text_col)
-    counts.write.mode("overwrite").parquet(f"{index_path}/batch={batch_id}")
+    write_batch(word_histogram(batch, text_col), index_path, batch_id)
 
 
 def merged_histogram(spark, index_path: str) -> DataFrame:
     """The additive merge of every committed batch partition —
     bpe_train_from_hist's input (shared read discipline:
     streaming/util.merged_additive)."""
-    from degdb_spark.streaming.util import merged_additive
-
     return merged_additive(spark, index_path, _INDEX_SCHEMA, ["w"], "n")

@@ -780,29 +780,38 @@ def test_no_raw_checkpoint_calls():
     lineage_cut() (iterative lineage truncation) so the
     ``spark.degdb.pin`` / ``spark.degdb.lineage_cut`` session knobs
     actually govern every materialization in every query path. An AST
-    walk (not grep) so comments/docstrings can mention the methods."""
+    walk (not grep) so comments/docstrings can mention the methods.
+
+    The same walk keeps the streaming twin kernel unforked:
+    ``streaming/util.py`` is the ONLY module allowed to call
+    ``foreachBatch`` — every twin starts through run_batches()."""
     import ast
     import pathlib
 
     import degdb_spark
 
     pkg = pathlib.Path(degdb_spark.__file__).parent
-    offenders: list[str] = []
-    for path in sorted(pkg.rglob("*.py")):
-        if path.name == "persistence.py":
-            continue
-        tree = ast.parse(path.read_text(), filename=str(path))
-        for node in ast.walk(tree):
-            if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr in ("localCheckpoint", "checkpoint")
-            ):
-                offenders.append(f"{path.relative_to(pkg.parent)}:{node.lineno}")
-    assert not offenders, (
-        "raw localCheckpoint/checkpoint call(s) outside persistence.py "
-        f"(use pin() or lineage_cut()): {offenders}"
-    )
+    gates = [
+        ("persistence.py", ("localCheckpoint", "checkpoint"),
+         "use pin() or lineage_cut()"),
+        ("streaming/util.py", ("foreachBatch",), "use run_batches()"),
+    ]
+    for owner, methods, fix in gates:
+        offenders: list[str] = []
+        for path in sorted(pkg.rglob("*.py")):
+            if path.relative_to(pkg).as_posix() == owner:
+                continue
+            tree = ast.parse(path.read_text(), filename=str(path))
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in methods
+                ):
+                    offenders.append(f"{path.relative_to(pkg.parent)}:{node.lineno}")
+        assert not offenders, (
+            f"raw {'/'.join(methods)} call(s) outside {owner} ({fix}): {offenders}"
+        )
 
 
 def test_kcenter_round_scan_no_shuffle_no_python(spark):

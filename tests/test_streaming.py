@@ -982,14 +982,18 @@ def test_dsir_counts_stream_equals_full_counts(spark, tmp_path):
     the batch-keyed bucket-count table; the summed live state must equal
     the full-corpus dsir_word_counts exactly, and scoring every doc
     from the streamed state must be bit-identical to scoring from the
-    directly-computed counts. Replaying batch 0's write must leave the
-    state unchanged (overwrite-keyed partitions)."""
+    directly-computed counts. Replaying batch 0 through the step must
+    leave the state unchanged (overwrite-keyed partitions)."""
     from degdb_spark.operators.text import (
         dsir_occurrences,
         dsir_scores,
         dsir_word_counts,
     )
-    from degdb_spark.streaming.dedup import dsir_counts_load, dsir_counts_stream
+    from degdb_spark.streaming.dedup import (
+        _dsir_counts_step,
+        dsir_counts_load,
+        dsir_counts_stream,
+    )
 
     docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
     target = "src0"
@@ -1026,13 +1030,9 @@ def test_dsir_counts_stream_equals_full_counts(spark, tmp_path):
     }
     assert s_loaded == s_direct
 
-    # replay batch 0: overwrite-keyed partition must converge
-    from degdb_spark.operators.text import dsir_word_counts as dwc
-
+    # replay batch 0 through the step: overwrite-keyed partition must converge
     b0 = spark.read.parquet(str(src_dir / "b0.parquet"))
-    dwc(dsir_occurrences(b0), target).write.mode("overwrite").parquet(
-        f"{counts_path}/batch=0"
-    )
+    _dsir_counts_step(b0, 0, counts_path, target)
     again = {(r.b, r.cb, r.ct) for r in dsir_counts_load(spark, counts_path).collect()}
     assert again == want
 
@@ -1173,6 +1173,23 @@ def test_index_stream_survives_crashed_first_write(spark, tmp_path):
     assert has_committed_parquet(spark, str(index_path))
     idx = spark.read.option("basePath", str(index_path)).parquet(str(index_path))
     assert idx.count() == 1
+
+
+@pytest.mark.parametrize(
+    "module, loader",
+    [("dedup", "dsir_counts_load"), ("hourcount", "merged_hourly_counts")],
+)
+def test_index_load_survives_crashed_first_write(spark, tmp_path, module, loader):
+    """The read side of the crashed-first-write case: a batch-keyed
+    index directory holding ONLY an uncommitted first write must load
+    as an empty state, not fail schema inference."""
+    import importlib
+
+    load = getattr(importlib.import_module(f"degdb_spark.streaming.{module}"), loader)
+    crashed = tmp_path / "idx" / "batch=0" / "_temporary" / "0"
+    crashed.mkdir(parents=True)
+    (crashed / "part-00000").write_bytes(b"junk")
+    assert load(spark, str(tmp_path / "idx")).count() == 0
 
 
 def test_audio_ahash_index_stream_equals_full_pairs(spark, tmp_path):
